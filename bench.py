@@ -157,7 +157,7 @@ def bench_compaction(spark, sf_dir: str) -> dict:
     - ``codec_*``: the control — plain ``spark.read.parquet(leaf).write``
       with NO compactor logic, i.e. the parquet decode+encode ceiling on
       this host. The merge's write phase matches this; the residual gap
-      is FIXED per-pass machinery (lake listing, 3-footer sample job,
+      is FIXED per-pass machinery (lake listing, 3-footer sample read,
       building the N-path relation, child session, commit renames,
       original deletes — measured ~4 s of an ~8 s pass at 700 MB) that
       amortizes with leaf bytes and is therefore invisible at real leaf

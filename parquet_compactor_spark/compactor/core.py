@@ -271,6 +271,58 @@ def plan_output_files(total_bytes: int, config: CompactionConfig) -> int:
     return max(1, math.ceil(total_bytes / config.file_size_bytes))
 
 
+def count_file_partitions(sizes: list[int], max_split_bytes: int, open_cost: int) -> int:
+    """Read tasks Spark plans for one scan of files of ``sizes`` bytes.
+
+    A model of Spark's file-scan planning with ``minPartitionNum=1``:
+    ``FilePartition.maxSplitBytes`` caps the split at the total bytes plus
+    one open cost per file; ``PartitionedFileUtil.splitFiles`` cuts each
+    (splittable) parquet file into split-sized pieces; and
+    ``FilePartition.getFilePartitions`` packs the pieces, largest first,
+    next-fit: a task is closed when the next piece would overflow it, and
+    every piece added costs its length plus the open cost.
+    """
+    cap = min(max_split_bytes, max(open_cost, sum(sizes) + len(sizes) * open_cost))
+    pieces = sorted(
+        (min(cap, size - off) for size in sizes for off in range(0, size, cap)),
+        reverse=True,
+    )
+    tasks, current = 0, 0
+    for piece in pieces:
+        if current + piece > cap:  # never on an empty task: piece <= cap
+            tasks, current = tasks + 1, 0
+        current += piece + open_cost
+    return tasks + (1 if pieces else 0)
+
+
+def merge_split_bytes(sizes: list[int], n_chunks: int, open_cost: int) -> int:
+    """``spark.sql.files.maxPartitionBytes`` for a shuffle-free merge of
+    files of ``sizes`` bytes into at most ``n_chunks`` read tasks, each
+    written as one output file.
+
+    The byte-balanced split, (bytes + one open cost per file) / n_chunks,
+    is used whenever Spark packs it into n_chunks tasks. Spark packs whole
+    files, so it may not: 64 files of ~1 MB in 3 chunks pack 21 to a task
+    and leave a fourth task of one file, which becomes a fourth output
+    file. Then a split that does pack into n_chunks tasks is binary-
+    searched up from the balanced one. The upper end, ceil(n_files /
+    n_chunks) × (largest file + open cost), always fits that many whole
+    files per task; once no file is cut into pieces, packing is monotone
+    in the split, so the search finds the smallest split that fits.
+    """
+    balanced = (sum(sizes) + len(sizes) * open_cost) // n_chunks + 1
+    if count_file_partitions(sizes, balanced, open_cost) <= n_chunks:
+        return balanced
+    lo, hi = balanced, -(-len(sizes) // n_chunks) * (max(sizes) + open_cost)
+    while hi - lo > 1:  # lo packs into too many tasks, hi does not
+        mid = (lo + hi) // 2
+        if count_file_partitions(sizes, mid, open_cost) <= n_chunks:
+            hi = mid
+        else:
+            lo = mid
+    return hi
+
+
 #: A merge's temp output dir: ``{leaf}_compact_tmp_{uuid4.hex}`` — since
 #: the leaf path ends with ``/``, an underscore-prefixed (hidden) CHILD
 #: of the leaf. A hard crash (OOM-kill, SIGKILL) skips _write_merged's
@@ -346,6 +398,9 @@ class LakeCompactor:
         #: wall time, so they no longer add up to the pass duration.
         self.phase_timings: dict[str, float] = {}
         self._phase_lock = threading.Lock()
+        #: Per-thread child session for merge reads (_merge_session);
+        #: replaced at the start of every compact() pass.
+        self._merge_sessions = threading.local()
 
     @contextmanager
     def _phase(self, name: str):
@@ -464,73 +519,33 @@ class LakeCompactor:
         finally:
             self.fs.delete(tmp_dir, recursive=True)
 
-    def _plan_merge_df(
-        self, file_list: list[str], sizes: dict[str, int], total_bytes: int, n_out: int
-    ):
-        """Build the merged DataFrame (shared by both commit modes)."""
-        reader = self.spark.read
+    def _read_parquet(self, session: SparkSession, file_list: list[str]):
+        reader = session.read
         if self.config.merge_schema:
             reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*file_list)
-        if self.config.zorder_by:
-            from parquet_compactor_spark.sources.io import zorder_key
+        return reader.parquet(*file_list)
 
-            z = zorder_key(df, list(self.config.zorder_by))
-            df = (
-                df.withColumn("_zkey", z)
-                .repartitionByRange(n_out, "_zkey")
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-        elif self.config.cluster_by:
-            df = df.repartitionByRange(
-                n_out, *self.config.cluster_by
-            ).sortWithinPartitions(*self.config.cluster_by)
-        else:
-            # Shuffle-free merge. repartition(n) is a full shuffle of
-            # the leaf — at lake scale the compactor would shuffle
-            # EVERYTHING it rewrites just to resize files. Instead,
-            # size the READ splits so each scan task holds ≈ one
-            # output file's worth, and write straight through: the
-            # plan is scan → write, zero exchanges, parallelism =
-            # output file count. Row density is uniform within a
-            # leaf, so byte-sized splits track the 1M-row chunk rule;
-            # targeting 90% of the cap keeps maxRecordsPerFile (the
-            # hard cap below) from splitting off remainder files.
-            #
-            # Row count: extrapolated from a 3-file footer sample,
-            # not a full metadata count() — a leaf of thousands of
-            # files pays one footer open PER FILE for an exact count
-            # whose only use is split sizing, and the same uniform-
-            # density assumption this sizing already rests on makes
-            # the sample equivalent. maxRecordsPerFile stays the
-            # exact, per-task hard cap either way, so an estimate
-            # error changes file sizes slightly, never correctness.
-            stride = max(1, len(file_list) // 3)
-            sample = file_list[::stride][:3]
-            sample_rows = self.spark.read.parquet(*sample).count()
-            sample_bytes = sum(sizes.get(p, 0) for p in sample)
-            rows = (
-                math.ceil(total_bytes * sample_rows / sample_bytes)
-                if sample_bytes
-                else 0
-            )
-            n_chunks = max(
-                n_out, math.ceil(rows / (0.9 * self.config.chunked_rows)), 1
-            )
-            open_cost = 65536
-            split = (total_bytes + len(file_list) * open_cost) // n_chunks + 1
-            # Isolated child session: same SparkContext/executors,
-            # PRIVATE SQLConf — concurrent leaf merges (compact's
-            # max_concurrency > 1 thread pool) each tune their own
-            # split size without racing on session-wide confs.
-            # newSession() does NOT inherit the parent's *runtime*
-            # SQL confs (parquet rebase modes, nanosAsLong,
-            # caseSensitive, ...), so a leaf readable via the
-            # caller's session could fail — or read differently — in
-            # the child, and the except-branch below would turn that
-            # conf mismatch into a silent skip. Copy the parent's
-            # modified confs first, then override the split sizing.
+    def _merge_session(self) -> SparkSession:
+        """This thread's isolated child session for the current pass.
+
+        Same SparkContext/executors, PRIVATE SQLConf: concurrent leaf
+        merges (compact's max_concurrency > 1 thread pool) each set their
+        own split size without racing on session-wide confs. One session
+        per thread is as isolated as one per merge: a thread runs its
+        merges one after another, and a merge's write plans its scan
+        (resolving the split confs) before the thread's next merge sets
+        new ones.
+
+        newSession() does NOT inherit the parent's *runtime* SQL confs
+        (parquet rebase modes, nanosAsLong, caseSensitive, ...), so a leaf
+        readable via the caller's session could fail — or read
+        differently — in the child, and the merge's except-branch would
+        turn that conf mismatch into a silent skip. The parent's
+        modifiable confs are copied once, when the session is made;
+        compact() drops the sessions at the start of each pass.
+        """
+        sess = getattr(self._merge_sessions, "session", None)
+        if sess is None:
             sess = self.spark.newSession()
             # isModifiable (not try/except) skips static confs: a
             # blanket except would also swallow a transient failure
@@ -539,14 +554,74 @@ class LakeCompactor:
             for key, value in self.spark.conf.getAll.items():
                 if sess.conf.isModifiable(key):
                     sess.conf.set(key, value)
-            sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
-            sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
-            sess.conf.set("spark.sql.files.minPartitionNum", "1")
-            reader = sess.read
-            if self.config.merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(*file_list)
-        return df
+            self._merge_sessions.session = sess
+        return sess
+
+    def _plan_merge_df(
+        self, file_list: list[str], sizes: dict[str, int], total_bytes: int, n_out: int
+    ):
+        """Build the merged DataFrame (shared by both commit modes).
+
+        Runs no Spark action: the only job it may launch is the read's
+        own schema inference (a lint in tests/test_lint.py keeps eager
+        actions and per-merge sessions out of it)."""
+        if self.config.zorder_by:
+            from parquet_compactor_spark.sources.io import zorder_key
+
+            df = self._read_parquet(self.spark, file_list)
+            z = zorder_key(df, list(self.config.zorder_by))
+            return (
+                df.withColumn("_zkey", z)
+                .repartitionByRange(n_out, "_zkey")
+                .sortWithinPartitions("_zkey")
+                .drop("_zkey")
+            )
+        if self.config.cluster_by:
+            return (
+                self._read_parquet(self.spark, file_list)
+                .repartitionByRange(n_out, *self.config.cluster_by)
+                .sortWithinPartitions(*self.config.cluster_by)
+            )
+        # Shuffle-free merge. repartition(n) is a full shuffle of the
+        # leaf — at lake scale the compactor would shuffle EVERYTHING it
+        # rewrites just to resize files. Instead, size the READ splits
+        # so each scan task holds ≈ one output file's worth, and write
+        # straight through: the plan is scan → write, zero exchanges,
+        # parallelism = output file count. Row density is uniform within
+        # a leaf, so byte-sized splits track the 1M-row chunk rule;
+        # targeting 90% of the cap keeps maxRecordsPerFile (the writer's
+        # hard cap) from splitting off remainder files.
+        #
+        # Row count: extrapolated from the footers of a 3-file sample,
+        # read on the driver (HadoopFS.parquet_rows: three footer opens,
+        # no Spark job). An exact count would open one footer PER FILE of
+        # a leaf of thousands for a number whose only use is split
+        # sizing, and the uniform-density assumption the sizing already
+        # rests on makes the sample equivalent. maxRecordsPerFile stays
+        # the exact, per-task hard cap either way, so an estimate error
+        # changes file sizes slightly, never correctness. An unreadable
+        # sample footer raises here and the merge keeps its originals.
+        stride = max(1, len(file_list) // 3)
+        sample = file_list[::stride][:3]
+        sample_rows = self.fs.parquet_rows(sample)
+        sample_bytes = sum(sizes.get(p, 0) for p in sample)
+        rows = (
+            math.ceil(total_bytes * sample_rows / sample_bytes)
+            if sample_bytes
+            else 0
+        )
+        n_chunks = max(n_out, math.ceil(rows / (0.9 * self.config.chunked_rows)), 1)
+        open_cost = 65536
+        split = merge_split_bytes(
+            [sizes.get(p, 0) for p in file_list], n_chunks, open_cost
+        )
+        # Only the split confs are set per merge, on this thread's
+        # pass-long child session (see _merge_session).
+        sess = self._merge_session()
+        sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+        sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
+        sess.conf.set("spark.sql.files.minPartitionNum", "1")
+        return self._read_parquet(sess, file_list)
 
     # Hidden sidecar recording direct-commit outputs (one basename per
     # line). Hidden name → invisible to planning and to spark.read.
@@ -952,6 +1027,9 @@ class LakeCompactor:
         iterates in listing order, so an interrupted run can spend its
         budget on leaves that barely need work.
         """
+        # Fresh child sessions per pass: a conf the caller set on the
+        # parent since the last pass must reach this pass's merges.
+        self._merge_sessions = threading.local()
         leaves = sorted(
             self.candidate_leaves().items(),
             key=lambda kv: (-len(kv[1]), kv[0]),

@@ -52,11 +52,17 @@ class HadoopFS:
         self._spark = spark
         self._jvm = spark._jvm
         self._conf = spark._jsc.hadoopConfiguration()
+        # JVM class handles, resolved once: py4j looks a dotted name up
+        # one segment per round trip, which every jpath() call would
+        # otherwise pay again.
+        self._Path = self._jvm.org.apache.hadoop.fs.Path
+        self._HadoopInputFile = self._jvm.org.apache.parquet.hadoop.util.HadoopInputFile
+        self._ParquetFileReader = self._jvm.org.apache.parquet.hadoop.ParquetFileReader
         self._root = self.jpath(root)
         self._fs = self._root.getFileSystem(self._conf)
 
     def jpath(self, uri: str):
-        return self._jvm.org.apache.hadoop.fs.Path(uri)
+        return self._Path(uri)
 
     def qualified(self, uri: str) -> str:
         """Fully-qualified URI string (scheme + authority), matching the
@@ -141,6 +147,22 @@ class HadoopFS:
                     )
                 )
         return out
+
+    def parquet_rows(self, paths: list[str]) -> int:
+        """Total row count of parquet files, read from their footers on
+        the driver: no Spark job, and the same Hadoop conf (so the same
+        object-store credentials) as every other call here. A file whose
+        footer cannot be read raises."""
+        rows = 0
+        for path in paths:
+            reader = self._ParquetFileReader.open(
+                self._HadoopInputFile.fromPath(self.jpath(path), self._conf)
+            )
+            try:
+                rows += int(reader.getRecordCount())
+            finally:
+                reader.close()
+        return rows
 
     def rename(self, src: str, dst: str) -> bool:
         return bool(self._fs.rename(self.jpath(src), self.jpath(dst)))

@@ -1438,3 +1438,310 @@ def test_schema_drift_tokens_survive_commas_inside_type_strings(spark, lake):
     (row,) = rows.values()
     assert row.n_schemas == 2 and row.drifted_files == 1
     assert row.drift_columns == "meta,price" and row.n_drift_columns == 2
+
+
+# --------------------------------------------------------------------------
+# Merge planning: read-split sizing, footer row estimate, child sessions
+# --------------------------------------------------------------------------
+
+
+def _balanced_split(sizes: list[int], n_chunks: int, open_cost: int) -> int:
+    """The byte-balanced split every merge used before split packing was
+    checked: (bytes + one open cost per file) // n_chunks + 1."""
+    return (sum(sizes) + len(sizes) * open_cost) // n_chunks + 1
+
+
+def test_merge_split_bytes_closes_the_big_leaf_remainder_task():
+    """64 near-uniform ~1 MB files (8 distinct sizes, like the benchmark's
+    big leaf) estimated at 2.56M rows plan 3 chunks. The balanced split
+    packs 21 files per task and leaves a fourth task of one file — a
+    fourth output file where ceil(rows / 1M) is 3."""
+    from parquet_compactor_spark.compactor.core import (
+        count_file_partitions,
+        merge_split_bytes,
+    )
+
+    sizes = [940_000 + 1_000 * (i % 8) for i in range(64)]
+    open_cost = 65536
+    balanced = _balanced_split(sizes, 3, open_cost)
+    assert count_file_partitions(sizes, balanced, open_cost) == 4
+    split = merge_split_bytes(sizes, 3, open_cost)
+    assert count_file_partitions(sizes, split, open_cost) == 3
+    # The smallest split that packs into 3 tasks: one byte less does not.
+    assert count_file_partitions(sizes, split - 1, open_cost) == 4
+
+
+def test_merge_split_bytes_properties():
+    """Without Spark, over arbitrary leaves: the split never packs into
+    more than n_chunks tasks, never into more tasks than the balanced
+    split, and IS the balanced split whenever that one already fits
+    (every single-chunk leaf among them)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from parquet_compactor_spark.compactor.core import (
+        count_file_partitions,
+        merge_split_bytes,
+    )
+
+    @given(
+        st.lists(st.integers(1, 5_000_000), min_size=2, max_size=80),
+        st.integers(1, 40),
+        st.sampled_from([65536, 4096, 1]),
+    )
+    @settings(max_examples=300, deadline=None)
+    def check(sizes, n_chunks, open_cost):
+        balanced = _balanced_split(sizes, n_chunks, open_cost)
+        split = merge_split_bytes(sizes, n_chunks, open_cost)
+        got = count_file_partitions(sizes, split, open_cost)
+        before = count_file_partitions(sizes, balanced, open_cost)
+        assert got <= n_chunks
+        assert got <= before
+        if before <= n_chunks:
+            assert split == balanced
+        if n_chunks == 1:
+            assert got == 1
+
+    check()
+
+
+def test_count_file_partitions_matches_spark_scan_planning(spark, tmp_path):
+    """The packing model merge_split_bytes relies on, pinned against the
+    read tasks Spark actually plans (rdd partitions of a scan in a child
+    session with the merge's three split confs), across splits that cut
+    files into pieces, pack several whole files, and hold the whole set."""
+    from parquet_compactor_spark.compactor.core import count_file_partitions
+
+    paths, sizes = [], []
+    for i, n in enumerate([1000, 5000, 20000, 3000, 7000, 50000, 100, 9000]):
+        p = tmp_path / f"f{i}.parquet"
+        pq.write_table(
+            pa.table({"a": list(range(n)), "b": [float(j % 97) for j in range(n)]}),
+            p,
+            row_group_size=2000,
+        )
+        paths.append(str(p))
+        sizes.append(p.stat().st_size)
+    sess = spark.newSession()
+    sess.conf.set("spark.sql.files.minPartitionNum", "1")
+    for open_cost in (65536, 1000):
+        sess.conf.set("spark.sql.files.openCostInBytes", str(open_cost))
+        for split in (5_000, 20_000, 60_000, 150_000, 400_000, 10**8):
+            sess.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+            got = sess.read.parquet(*paths).rdd.getNumPartitions()
+            assert count_file_partitions(sizes, split, open_cost) == got, (
+                open_cost,
+                split,
+            )
+
+
+def test_many_file_leaf_writes_ceil_rows_over_chunk_files(spark, lake):
+    """End to end: 64 files of 2000 rows and ~220 KB (a random 100-byte
+    payload per row, so bytes outweigh the 64 KB open cost as they do in
+    real leaves) with a 50k-row chunk: 128k rows, 3 chunks, and exactly
+    ceil(128k / 50k) = 3 files written. The balanced split packed 21
+    files per task and wrote a fourth, one-file output."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    leaf.mkdir(parents=True)
+    for i in range(64):
+        path = leaf / f"in-{i:02d}.parquet"
+        ids = list(range(i * 2000, (i + 1) * 2000))
+        pq.write_table(
+            pa.table({"id": ids, "payload": [os.urandom(100) for _ in ids]}), path
+        )
+        os.utime(path, (OLD.timestamp(), OLD.timestamp()))
+
+    lc = LakeCompactor(spark, str(lake), CompactionConfig(now=NOW, chunked_rows=50_000))
+    assert list(lc.compact().values()) == ["compacted_64_files"]
+    outputs = sorted(leaf.glob("*.parquet"))
+    assert len(outputs) == 3
+    assert all(pq.read_metadata(p).num_rows <= 50_000 for p in outputs)
+    assert read_ids(leaf) == list(range(128_000))
+
+
+def test_parquet_rows_matches_spark_count(spark, tmp_path):
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    for i, n in enumerate([10, 250, 3]):
+        write_small_parquet(tmp_path / f"f{i}.parquet", rows=n)
+    paths = sorted(str(p) for p in tmp_path.glob("*.parquet"))
+    fs = HadoopFS(spark, str(tmp_path))
+    assert fs.parquet_rows(paths) == spark.read.parquet(*paths).count() == 263
+    assert fs.parquet_rows(paths[:1]) == spark.read.parquet(paths[0]).count()
+    assert fs.parquet_rows([]) == 0
+
+
+def test_parquet_rows_matches_spark_count_on_object_store(spark):
+    """Same footer read through the mocks3 object-store FileSystem: the
+    lake's Hadoop conf resolves the scheme, as it does for listing."""
+    import shutil
+
+    from tests.conftest import MOCKS3_ROOT, build_mocks3_jar
+
+    if build_mocks3_jar() is None:
+        pytest.skip("javac/jar toolchain or hadoop-client-api unavailable")
+    from parquet_compactor_spark.compactor.fs import HadoopFS
+
+    bucket = "parquet-rows"
+    phys = Path(MOCKS3_ROOT) / bucket
+    shutil.rmtree(phys, ignore_errors=True)
+    for i, n in enumerate([7, 120, 31]):
+        write_small_parquet(phys / "leaf" / f"f{i}.parquet", rows=n)
+    paths = [f"mocks3://{bucket}/leaf/f{i}.parquet" for i in range(3)]
+    fs = HadoopFS(spark, f"mocks3://{bucket}/leaf")
+    assert fs.parquet_rows(paths) == spark.read.parquet(*paths).count() == 158
+
+
+def _count_new_sessions(monkeypatch) -> list[int]:
+    """Patch SparkSession.newSession to record the calling thread."""
+    import threading
+
+    from pyspark.sql import SparkSession
+
+    calls: list[int] = []
+    original = SparkSession.newSession
+
+    def counting(self):
+        calls.append(threading.get_ident())
+        return original(self)
+
+    monkeypatch.setattr(SparkSession, "newSession", counting)
+    return calls
+
+
+def _three_leaf_lake(lake: Path) -> None:
+    for month in ("01", "02", "03"):
+        leaf = lake / "acct1" / "source=OCP" / "year=2024" / f"month={month}"
+        for i in range(3):
+            write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+
+
+def test_compact_creates_one_merge_session_per_pass(spark, lake, monkeypatch):
+    _three_leaf_lake(lake)
+    calls = _count_new_sessions(monkeypatch)
+    outcomes = compactor(spark, lake).compact()
+    assert sorted(outcomes.values()) == ["compacted_3_files"] * 3
+    assert len(calls) == 1
+
+
+def test_compact_creates_one_merge_session_per_worker_thread(spark, lake, monkeypatch):
+    _three_leaf_lake(lake)
+    calls = _count_new_sessions(monkeypatch)
+    outcomes = compactor(spark, lake).compact(max_concurrency=2)
+    assert sorted(outcomes.values()) == ["compacted_3_files"] * 3
+    assert 1 <= len(calls) <= 2
+    assert len(calls) == len(set(calls))  # never twice on one thread
+
+
+def test_plan_merge_df_launches_at_most_the_schema_inference_job(spark, lake):
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=01"
+    for i in range(6):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    lc = compactor(spark, lake)
+    files = [str(p) for p in sorted(leaf.glob("*.parquet"))]
+    sizes = {p: os.path.getsize(p) for p in files}
+    sc = spark.sparkContext
+    group = f"plan-merge-df-{time.time_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        df = lc._plan_merge_df(files, sizes, sum(sizes.values()), 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 1
+    assert df.count() == 600
+
+
+def test_reused_compactor_picks_up_parent_conf_on_next_pass(spark, lake):
+    """Merge sessions live for one pass: a conf the caller sets on the
+    parent between two compact() calls on the same LakeCompactor reaches
+    the second pass's merges (here binaryAsString turns the payload
+    column into a string in the merged output)."""
+
+    def binary_leaf(month: str) -> Path:
+        leaf = lake / "acct1" / "source=OCP" / "year=2024" / f"month={month}"
+        leaf.mkdir(parents=True, exist_ok=True)
+        for i in range(3):
+            path = leaf / f"in-{i}.parquet"
+            pq.write_table(
+                pa.table({"id": [i], "payload": pa.array([b"blob"])}),
+                path,
+                store_schema=False,
+            )
+            t = OLD.timestamp()
+            os.utime(path, (t, t))
+        return leaf
+
+    lc = compactor(spark, lake)
+    first = binary_leaf("01")
+    assert list(lc.compact().values()) == ["compacted_3_files"]
+    (out,) = first.glob("*.parquet")
+    assert pa.types.is_binary(pq.read_schema(out).field("payload").type)
+
+    second = binary_leaf("02")
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        outcomes = lc.compact()
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert sorted(outcomes.values()) == ["compacted_3_files", "nothing_to_compact"]
+    (out,) = second.glob("*.parquet")
+    payload = pq.read_schema(out).field("payload").type
+    assert pa.types.is_string(payload) or pa.types.is_large_string(payload)
+
+
+def test_concurrent_merges_keep_their_own_split_sizes(spark, lake, monkeypatch):
+    """More merge threads than cores, over leaves whose split sizes
+    differ by ~3x, with a short interpreter switch interval: each worker
+    thread's pass-long session carries its own merge's split confs only,
+    so every leaf still writes its planned file count (a 64-file leaf read
+    under an 8-file leaf's split would write 8 files, not 3)."""
+    import sys
+
+    files_per_leaf = {"01": 64, "02": 8, "03": 64, "04": 8, "05": 64, "06": 8}
+    leaves = {}
+    for month, n in files_per_leaf.items():
+        leaves[month] = lake / "acct1" / "source=OCP" / "year=2024" / f"month={month}"
+        for i in range(n):
+            write_small_parquet(leaves[month] / f"in-{i:02d}.parquet", start=i * 40, rows=40)
+    calls = _count_new_sessions(monkeypatch)
+    lc = LakeCompactor(spark, str(lake), CompactionConfig(now=NOW, chunked_rows=1000))
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        outcomes = lc.compact(max_concurrency=6)
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(outcomes.values()) == sorted(
+        f"compacted_{n}_files" for n in files_per_leaf.values()
+    )
+    for month, n in files_per_leaf.items():
+        assert len(list(leaves[month].glob("*.parquet"))) == (3 if n == 64 else 1)
+        assert read_ids(leaves[month]) == list(range(n * 40))
+    assert 1 <= len(calls) <= 6
+    assert len(calls) == len(set(calls))
+
+
+def test_unreadable_sample_footer_keeps_originals_under_ignore_corrupt_files(spark, lake):
+    """With spark.sql.files.ignoreCorruptFiles=true the merge READ would
+    skip a corrupt file, and the pass would then delete it as merged. The
+    row estimate reads the sample footers itself and fails on it first,
+    so the originals, the corrupt file included, are kept."""
+    leaf = lake / "acct1" / "source=OCP" / "year=2024" / "month=07"
+    for i in range(2):
+        write_small_parquet(leaf / f"in-{i}.parquet", start=i * 100)
+    corrupt = leaf / "in-corrupt.parquet"
+    corrupt.write_bytes(b"this is not parquet")
+    os.utime(corrupt, (OLD.timestamp(), OLD.timestamp()))
+
+    spark.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    try:
+        outcomes = compactor(spark, lake).compact()
+    finally:
+        spark.conf.unset("spark.sql.files.ignoreCorruptFiles")
+    assert list(outcomes.values()) == ["merge_failed_originals_kept"]
+    assert {p.name for p in leaf.glob("*.parquet")} == {
+        "in-0.parquet",
+        "in-1.parquet",
+        "in-corrupt.parquet",
+    }

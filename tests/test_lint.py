@@ -24,6 +24,13 @@ Two detectors, both run over every module in ``parquet_compactor_spark``:
 
 Both detectors are themselves pinned against the historical pre-fix
 sources so a refactor of the lint cannot silently blind it.
+
+A third check keeps per-leaf merge planning free of driver round trips
+that move no bytes: ``LakeCompactor._plan_merge_df`` runs once per merge,
+so an eager action there (``.count()``, ``.collect()``, ``.first()``,
+``.take()``) is one more Spark job per leaf, and a ``newSession()`` there
+is a session plus a conf copy per leaf. Its detector is pinned against
+the planning code that did both.
 """
 
 from __future__ import annotations
@@ -177,3 +184,68 @@ def test_lint_passes_the_bound_form():
     tree = ast.parse(_FIXED_SHINGLES)
     assert not _py_lambda_violations(tree, "fixed_shingles.py")
     assert not _sql_string_violations(tree, "fixed_shingles.py")
+
+
+# -- eager actions in per-leaf merge planning ----------------------------
+
+CORE = PKG / "compactor" / "core.py"
+
+#: Calls that launch a Spark job, or build a session, on every merge.
+_EAGER_PLAN_CALLS = {"count", "collect", "first", "take", "newSession"}
+
+
+def _plan_merge_violations(tree: ast.AST, path: str) -> list[str] | None:
+    """Eager calls inside ``LakeCompactor._plan_merge_df``; None when the
+    method is not found (so a rename cannot pass the lint vacuously)."""
+    for cls in ast.walk(tree):
+        if not (isinstance(cls, ast.ClassDef) and cls.name == "LakeCompactor"):
+            continue
+        for fn in cls.body:
+            if not (isinstance(fn, ast.FunctionDef) and fn.name == "_plan_merge_df"):
+                continue
+            out = []
+            for sub in ast.walk(fn):
+                if not isinstance(sub, ast.Call):
+                    continue
+                f = sub.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in _EAGER_PLAN_CALLS:
+                    out.append(
+                        f"{path}:{sub.lineno}: `{name}(…)` in per-leaf merge "
+                        "planning costs a Spark job or a session per leaf — "
+                        "read footers on the driver (HadoopFS.parquet_rows) "
+                        "and reuse the pass's merge session"
+                    )
+            return out
+    return None
+
+
+def test_no_eager_actions_in_merge_planning():
+    violations = _plan_merge_violations(ast.parse(CORE.read_text()), "core.py")
+    assert violations is not None, "LakeCompactor._plan_merge_df not found"
+    assert not violations, "\n".join(violations)
+
+
+_PRE_FIX_PLAN_MERGE = """
+class LakeCompactor:
+    def _plan_merge_df(self, file_list, sizes, total_bytes, n_out):
+        reader = self.spark.read
+        df = reader.parquet(*file_list)
+        stride = max(1, len(file_list) // 3)
+        sample = file_list[::stride][:3]
+        sample_rows = self.spark.read.parquet(*sample).count()
+        sample_bytes = sum(sizes.get(p, 0) for p in sample)
+        sess = self.spark.newSession()
+        for key, value in self.spark.conf.getAll.items():
+            if sess.conf.isModifiable(key):
+                sess.conf.set(key, value)
+        return sess.read.parquet(*file_list)
+"""
+
+
+def test_lint_catches_pre_fix_merge_planning():
+    violations = _plan_merge_violations(
+        ast.parse(_PRE_FIX_PLAN_MERGE), "pre_fix_core.py"
+    )
+    assert violations is not None and len(violations) == 2
+    assert "`count(…)`" in violations[0] and "`newSession(…)`" in violations[1]
