@@ -338,6 +338,13 @@ def _in_tmp_dir(path: str) -> bool:
     return TMP_DIR_RE.search(path) is not None
 
 
+def _is_crash_litter_dir(dir_path: str) -> bool:
+    """True for a leaf child dir a crashed merge leaves behind: a
+    ``_compact_tmp_<hex>`` dir or the committer's ``_temporary`` tree."""
+    name = dir_path.rstrip("/").rsplit("/", 1)[-1]
+    return name == "_temporary" or bool(TMP_DIR_RE.search(name))
+
+
 def _is_mergeable_data_file(path: str) -> bool:
     """True for files a parquet merge would actually read: ``*.parquet``
     with a non-hidden basename (Spark's readers skip ``_``/``.`` prefixed
@@ -634,23 +641,20 @@ class LakeCompactor:
     # merge and their deletes retried each pass until they succeed.
     PENDING_DELETES_NAME = "_pending_deletes.manifest"
 
-    def _read_manifest(self, leaf: str) -> set[str]:
-        path = f"{leaf}{self.MANIFEST_NAME}"
+    def _read_sidecar(self, leaf: str, name: str) -> set[str]:
+        path = f"{leaf}{name}"
         if not self.fs.exists(path):
             return set()
         return {ln for ln in self.fs.read_text(path).splitlines() if ln}
+
+    def _read_manifest(self, leaf: str) -> set[str]:
+        return self._read_sidecar(leaf, self.MANIFEST_NAME)
 
     def _write_manifest(self, leaf: str, names: set[str]) -> None:
         with self._phase("commit"):
             self.fs.write_text(
                 f"{leaf}{self.MANIFEST_NAME}", "\n".join(sorted(names))
             )
-
-    def _read_pending_deletes(self, leaf: str) -> set[str]:
-        path = f"{leaf}{self.PENDING_DELETES_NAME}"
-        if not self.fs.exists(path):
-            return set()
-        return {ln for ln in self.fs.read_text(path).splitlines() if ln}
 
     def _write_pending_deletes(self, leaf: str, names: set[str]) -> None:
         path = f"{leaf}{self.PENDING_DELETES_NAME}"
@@ -668,7 +672,7 @@ class LakeCompactor:
         listing snapshotted it, so merging it would fail on a missing
         input (and a still-pending one must never be re-merged at all).
         """
-        pending = self._read_pending_deletes(leaf)
+        pending = self._read_sidecar(leaf, self.PENDING_DELETES_NAME)
         if not pending:
             return set(), set()
         still: set[str] = set()
@@ -952,10 +956,6 @@ class LakeCompactor:
         cutoff = self.config.utcnow() - timedelta(hours=min_age_hours)
         newest: dict[str, datetime] = {}
 
-        def _reclaimable(dir_path: str) -> bool:
-            name = dir_path.rstrip("/").rsplit("/", 1)[-1]
-            return name == "_temporary" or bool(TMP_DIR_RE.search(name))
-
         def _newest_under(d) -> datetime:
             files = self.fs.list_files(d.path)
             if not files and d.modified <= 0:
@@ -980,7 +980,7 @@ class LakeCompactor:
             while stack:
                 cur = stack.pop()
                 for d in self.fs.list_dirs(cur):
-                    if _reclaimable(d.path):
+                    if _is_crash_litter_dir(d.path):
                         newest[d.path] = _newest_under(d)
                     else:
                         stack.append(d.path)
@@ -992,7 +992,7 @@ class LakeCompactor:
                 return [
                     (d.path, _newest_under(d))
                     for d in self.fs.list_dirs(leaf)
-                    if _reclaimable(d.path)
+                    if _is_crash_litter_dir(d.path)
                 ]
 
             for probed in self._fs_parallel(_probe, list(leaves)):
@@ -1107,15 +1107,15 @@ class LakeCompactor:
             missing = sorted(self._read_manifest(leaf) - names)
             if missing:
                 finding["manifest_missing"] = missing
-            present = sorted(self._read_pending_deletes(leaf) & names)
+            present = sorted(
+                self._read_sidecar(leaf, self.PENDING_DELETES_NAME) & names
+            )
             if present:
                 finding["pending_present"] = present
             orphans = sorted(
                 d.path
                 for d in self.fs.list_dirs(leaf)
-                if (lambda n: n == "_temporary" or TMP_DIR_RE.search(n))(
-                    d.path.rstrip("/").rsplit("/", 1)[-1]
-                )
+                if _is_crash_litter_dir(d.path)
             )
             if orphans:
                 finding["orphan_tmp_dirs"] = orphans

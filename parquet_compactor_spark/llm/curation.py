@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_compactor_spark.llm.extract import extract
 from parquet_compactor_spark.registry import load, register
 
 #: Context-window budget (whitespace tokens) for sequence packing.
@@ -3520,6 +3521,12 @@ HTML_EXTRACT_ORACLE = """
 """
 
 
+HTML_EXTRACT_SCHEMA = (
+    "doc_id bigint, title string, n_blocks int, n_kept int, "
+    "kept_chars bigint, kept_md5 string"
+)
+
+
 def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML main-content extraction: per row, a REAL web page (nav,
     content paragraphs, ad/footer link farms, script/style subtrees,
@@ -3536,48 +3543,16 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import hashlib
 
-    import pandas as pd
-
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     payloads = d.select(
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = extract_main_text(synth_html(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["title"],
-                        m["n_blocks"],
-                        m["n_kept"],
-                        m["kept_chars"],
-                        hashlib.md5(m["kept_text"].encode()).hexdigest(),
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-                    "title": pd.array([r[1] for r in rows], dtype="string"),
-                    "n_blocks": pd.array([r[2] for r in rows], dtype="Int32"),
-                    "n_kept": pd.array([r[3] for r in rows], dtype="Int32"),
-                    "kept_chars": pd.array(
-                        [r[4] for r in rows], dtype="int64"
-                    ),
-                    "kept_md5": pd.array([r[5] for r in rows], dtype="string"),
-                }
-            )
+    def page(n: int) -> dict:
+        m = extract_main_text(synth_html(n))
+        return dict(m, kept_md5=hashlib.md5(m["kept_text"].encode()).hexdigest())
 
-    return payloads.mapInPandas(
-        batches,
-        schema=(
-            "doc_id bigint, title string, n_blocks int, n_kept int, "
-            "kept_chars bigint, kept_md5 string"
-        ),
-    )
+    return extract(payloads, page, HTML_EXTRACT_SCHEMA, col="n")
 
 
 # ---------------------------------------------------------------------------
@@ -3748,72 +3723,24 @@ def parse_warc(payload: bytes) -> list[dict]:
     return records
 
 
-def _warc_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """One Arrow-safe typed frame for WARC_RECORDS_SCHEMA rows — shared
-    by the extract seam and q_warc_records so their dtypes cannot
-    diverge (the _audio_meta_frame convention)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "rec_idx": pd.array([r[1] for r in rows], dtype="Int32"),
-            "warc_type": pd.array([r[2] for r in rows], dtype="string"),
-            "uri": pd.array([r[3] for r in rows], dtype="string"),
-            "http_status": pd.array([r[4] for r in rows], dtype="Int32"),
-            "mime": pd.array([r[5] for r in rows], dtype="string"),
-            "payload_chars": pd.array([r[6] for r in rows], dtype="Int64"),
-        }
-    )
-
-
-def _webdataset_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for WEBDATASET_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "key": pd.array([r[1] for r in rows], dtype="string"),
-            "n_members": pd.array([r[2] for r in rows], dtype="Int32"),
-            "exts": pd.array([r[3] for r in rows], dtype="string"),
-            "total_bytes": pd.array([r[4] for r in rows], dtype="int64"),
-        }
-    )
+def _indexed(records: list[dict]) -> list[dict]:
+    """parse_warc's records with their position in the file as rec_idx."""
+    return [dict(r, rec_idx=i) for i, r in enumerate(records)]
 
 
 def extract_warc_records(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` WARC record table over (doc_id, payload: binary)
+    """WARC record table over (doc_id, payload: binary)
     — the genuine-lake entry point: one input blob (a WARC file, plain
     or member-gzipped) explodes to one row per contained record; blobs
     that are not parseable WARCs are DROPPED (row-wise degrade). The
     natural upstream of extract_main_text / q_robots_admission /
     q_url_dedup in a crawl pipeline."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_warc(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError) as _:
-                    continue
-                for idx, r in enumerate(recs):
-                    rows.append(
-                        (
-                            doc_id,
-                            idx,
-                            r["warc_type"],
-                            r["uri"],
-                            r["http_status"],
-                            r["mime"],
-                            r["payload_chars"],
-                        )
-                    )
-            yield _warc_frame(rows)
-
-    return df.mapInPandas(batches, schema=WARC_RECORDS_SCHEMA)
+    return extract(
+        df,
+        lambda b: _indexed(parse_warc(b or b"")),
+        WARC_RECORDS_SCHEMA,
+        explode=True,
+    )
 
 
 WARC_RECORDS_SCHEMA = (
@@ -3869,27 +3796,13 @@ def q_warc_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for idx, r in enumerate(parse_warc(_synth_warc(int(n)))):
-                    rows.append(
-                        (
-                            doc_id,
-                            idx,
-                            r["warc_type"],
-                            r["uri"],
-                            r["http_status"],
-                            r["mime"],
-                            r["payload_chars"],
-                        )
-                    )
-            yield _warc_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WARC_RECORDS_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: _indexed(parse_warc(_synth_warc(n))),
+        WARC_RECORDS_SCHEMA,
+        col="n",
+        explode=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4035,35 +3948,15 @@ WEBDATASET_SCHEMA = (
 
 
 def extract_webdataset_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` WebDataset sample table over (doc_id, payload:
+    """WebDataset sample table over (doc_id, payload:
     binary) — one input shard explodes to one row per SAMPLE (the
     training unit), blobs that are not parseable tars dropping
     row-wise. The shard-level twin of a WebDataset loader's grouping
     pass, as a lake-wide audit: member completeness (exts) and sample
     sizes without ever decoding member contents."""
-    import pandas as pd
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_webdataset(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                        )
-                    )
-            yield _webdataset_frame(rows)
-
-    return df.mapInPandas(batches, schema=WEBDATASET_SCHEMA)
+    return extract(
+        df, lambda b: parse_webdataset(b or b""), WEBDATASET_SCHEMA, explode=True
+    )
 
 
 #: q_webdataset_samples' DuckDB oracle — the sample closed form via
@@ -4113,25 +4006,13 @@ def q_webdataset_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_webdataset(_synth_webdataset(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                        )
-                    )
-            yield _webdataset_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WEBDATASET_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: parse_webdataset(_synth_webdataset(n)),
+        WEBDATASET_SCHEMA,
+        col="n",
+        explode=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4417,52 +4298,16 @@ ZIP_SAMPLES_SCHEMA = (
 )
 
 
-def _zip_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for ZIP_SAMPLES_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "key": pd.array([r[1] for r in rows], dtype="string"),
-            "n_members": pd.array([r[2] for r in rows], dtype="Int32"),
-            "exts": pd.array([r[3] for r in rows], dtype="string"),
-            "total_bytes": pd.array([r[4] for r in rows], dtype="int64"),
-            "comp_bytes": pd.array([r[5] for r in rows], dtype="int64"),
-        }
-    )
-
-
 def extract_zip_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` ZIP sample table over (doc_id, payload: binary) —
+    """ZIP sample table over (doc_id, payload: binary) —
     one input shard explodes to one row per SAMPLE, blobs that are not
     parseable ZIP archives dropping row-wise. The zip twin of
     :func:`extract_webdataset_samples`, with per-sample compressed
     bytes alongside (compression-ratio audits fall out of
     ``comp_bytes / total_bytes``)."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_zip_samples(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                            r["comp_bytes"],
-                        )
-                    )
-            yield _zip_frame(rows)
-
-    return df.mapInPandas(batches, schema=ZIP_SAMPLES_SCHEMA)
+    return extract(
+        df, lambda b: parse_zip_samples(b or b""), ZIP_SAMPLES_SCHEMA, explode=True
+    )
 
 
 #: q_zip_samples' DuckDB oracle — the sample closed form via LATERAL
@@ -4516,24 +4361,13 @@ def q_zip_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_zip_samples(_synth_zip(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["key"],
-                            r["n_members"],
-                            r["exts"],
-                            r["total_bytes"],
-                            r["comp_bytes"],
-                        )
-                    )
-            yield _zip_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=ZIP_SAMPLES_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: parse_zip_samples(_synth_zip(n)),
+        ZIP_SAMPLES_SCHEMA,
+        col="n",
+        explode=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4833,54 +4667,16 @@ SITEMAP_SCHEMA = (
 )
 
 
-def _sitemap_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for SITEMAP_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "seq": pd.array([r[1] for r in rows], dtype="Int32"),
-            "kind": pd.array([r[2] for r in rows], dtype="string"),
-            "loc": pd.array([r[3] for r in rows], dtype="string"),
-            "lastmod": pd.array([r[4] for r in rows], dtype="string"),
-            "changefreq": pd.array([r[5] for r in rows], dtype="string"),
-            "priority": pd.array([r[6] for r in rows], dtype="string"),
-        }
-    )
-
-
 def extract_sitemap_urls(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` sitemap-entry table over (doc_id, payload:
+    """Sitemap-entry table over (doc_id, payload:
     string) — one sitemap document explodes to one row per entry,
     documents that are not parseable sitemaps dropping row-wise. The
     crawl-frontier seam: downstream the loc column keys into
     :func:`canonical_url` and the per-host robots admission exactly
     like fetched URLs do."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, t in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_sitemap("" if t is None else str(t))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["seq"],
-                            r["kind"],
-                            r["loc"],
-                            r["lastmod"],
-                            r["changefreq"],
-                            r["priority"],
-                        )
-                    )
-            yield _sitemap_frame(rows)
-
-    return df.mapInPandas(batches, schema=SITEMAP_SCHEMA)
+    return extract(
+        df, lambda t: parse_sitemap(t or ""), SITEMAP_SCHEMA, explode=True
+    )
 
 
 #: q_sitemap_urls' DuckDB oracle — the entry closed form via LATERAL
@@ -4943,25 +4739,13 @@ def q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_sitemap(_synth_sitemap(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["seq"],
-                            r["kind"],
-                            r["loc"],
-                            r["lastmod"],
-                            r["changefreq"],
-                            r["priority"],
-                        )
-                    )
-            yield _sitemap_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=SITEMAP_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: parse_sitemap(_synth_sitemap(n)),
+        SITEMAP_SCHEMA,
+        col="n",
+        explode=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5273,56 +5057,16 @@ TFRECORD_SCHEMA = (
 )
 
 
-def _tfrecord_frame(rows: list[tuple]) -> "pd.DataFrame":
-    """Shared typed frame for TFRECORD_SCHEMA rows (see _warc_frame)."""
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array([r[0] for r in rows], dtype="int64"),
-            "rec": pd.array([r[1] for r in rows], dtype="Int32"),
-            "n_features": pd.array([r[2] for r in rows], dtype="Int32"),
-            "features": pd.array([r[3] for r in rows], dtype="string"),
-            "n_ints": pd.array([r[4] for r in rows], dtype="Int32"),
-            "n_floats": pd.array([r[5] for r in rows], dtype="Int32"),
-            "text_bytes": pd.array([r[6] for r in rows], dtype="int64"),
-            "payload_bytes": pd.array([r[7] for r in rows], dtype="int64"),
-        }
-    )
-
-
 def extract_tfrecord_samples(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` TFRecord record table over (doc_id, payload:
+    """TFRecord record table over (doc_id, payload:
     binary) — one shard explodes to one row per record, blobs that are
     not parseable TFRecord shards dropping row-wise. The third member
     of the training-shard audit family (tar, zip, tfrecord): feature
     completeness and size accounting without a protobuf or TF
     dependency anywhere."""
-
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    recs = parse_tfrecords(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError):
-                    continue
-                for r in recs:
-                    rows.append(
-                        (
-                            doc_id,
-                            r["rec"],
-                            r["n_features"],
-                            r["features"],
-                            r["n_ints"],
-                            r["n_floats"],
-                            r["text_bytes"],
-                            r["payload_bytes"],
-                        )
-                    )
-            yield _tfrecord_frame(rows)
-
-    return df.mapInPandas(batches, schema=TFRECORD_SCHEMA)
+    return extract(
+        df, lambda b: parse_tfrecords(b or b""), TFRECORD_SCHEMA, explode=True
+    )
 
 
 #: q_tfrecord_samples' DuckDB oracle — the record closed form via
@@ -5394,23 +5138,10 @@ def q_tfrecord_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                for r in parse_tfrecords(_synth_tfrecord(int(n))):
-                    rows.append(
-                        (
-                            doc_id,
-                            r["rec"],
-                            r["n_features"],
-                            r["features"],
-                            r["n_ints"],
-                            r["n_floats"],
-                            r["text_bytes"],
-                            r["payload_bytes"],
-                        )
-                    )
-            yield _tfrecord_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=TFRECORD_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: parse_tfrecords(_synth_tfrecord(n)),
+        TFRECORD_SCHEMA,
+        col="n",
+        explode=True,
+    )

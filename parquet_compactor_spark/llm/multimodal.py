@@ -2,7 +2,9 @@
 
 Image/audio/video content is carried as opaque ``binary`` columns with
 typed metadata alongside. The Spark-side plumbing — schema, Arrow batch
-shape, ``mapInPandas`` signatures, partitioning — is real and tested.
+shape, partitioning — is real and tested, and every per-blob extractor
+runs through the one ``mapInArrow`` kernel,
+:func:`parquet_compactor_spark.llm.extract.extract`.
 Image HEADER decoding (dimensions/bit-depth/mode for PNG, JPEG, GIF) is
 real too — a pure-Python byte parse, no codec library (``decode_image``) —
 and so is PIXEL decoding for all three: PNG (stdlib zlib + integer
@@ -15,19 +17,18 @@ SQL-oracle-expressible.
 
 The fixture lake has no binary table, so payloads are derived from
 ``documents.text`` utf-8 bytes — which also makes the fake-decode
-arithmetic SQL-expressible, so even the pandas-UDF path is oracle-checked.
+arithmetic SQL-expressible, so even the Python per-blob path is
+oracle-checked.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_compactor_spark.llm.extract import DECODE_ERRORS, extract
 from parquet_compactor_spark.registry import load, register
 
 META_SCHEMA = (
@@ -152,16 +153,16 @@ def _blob_meta(payload: bytes) -> tuple[int, int, int, str]:
     if b[:8] == _PNG_MAGIC or b[:2] == b"\xff\xd8":
         try:
             m = decode_image(b)
-        except (ValueError, NotImplementedError, struct.error):
+        except DECODE_ERRORS:
             return fake_decode_meta(b)
         return m["width"], m["height"], 1, "image"
     return fake_decode_meta(b)
 
 
 def extract_media_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` metadata extraction over (doc_id, payload: binary).
+    """Metadata extraction over (doc_id, payload: binary).
 
-    Arrow-batched: each pandas batch maps payload bytes → typed metadata
+    Arrow-batched through :func:`extract`: payload bytes → typed metadata
     columns. This is the canonical shape for any per-blob Python work
     (decode, feature-extract, resize): PNG/JPEG payloads get a real
     header parse (:func:`_blob_meta`), everything else the deterministic
@@ -169,21 +170,17 @@ def extract_media_meta(df: DataFrame) -> DataFrame:
     plumbing is unchanged.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [_blob_meta(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [0 if b is None else len(b) for b in pdf["payload"]],
-                    "width": [m[0] for m in metas],
-                    "height": [m[1] for m in metas],
-                    "n_frames": [m[2] for m in metas],
-                    "modality": [m[3] for m in metas],
-                }
-            )
+    def meta(payload) -> dict:
+        width, height, n_frames, modality = _blob_meta(payload)
+        return {
+            "n_bytes": 0 if payload is None else len(payload),
+            "width": width,
+            "height": height,
+            "n_frames": n_frames,
+            "modality": modality,
+        }
 
-    return df.mapInPandas(batches, schema=META_SCHEMA)
+    return extract(df, meta, META_SCHEMA)
 
 
 @register(
@@ -213,7 +210,7 @@ def extract_media_meta(df: DataFrame) -> DataFrame:
     GROUP BY source, modality
     """,
     doc="Multimodal metadata pipeline: binary payload column → Arrow-"
-    "batched mapInPandas decode (deterministic fake; real codec is the "
+    "batched mapInArrow decode (deterministic fake; real codec is the "
     "documented stub seam) → typed metadata → relational agg. Proves the "
     "full binary-column plumbing end-to-end against a SQL oracle.",
 )
@@ -282,7 +279,7 @@ def sample_frames(meta: DataFrame, every_k: int = 5) -> DataFrame:
            unnest(range(0, n_frames, 5)) * (n_bytes // n_frames) AS byte_offset
     FROM vids
     """,
-    doc="Video frame sampling: binary payloads → mapInPandas metadata → "
+    doc="Video frame sampling: binary payloads → mapInArrow metadata → "
     "every-5th-frame index/byte-offset explosion (the decode-ready work "
     "list a video pipeline feeds to per-frame codecs). Narrow ops only — "
     "no shuffle; at 100 TB each executor samples its own blobs.",
@@ -716,7 +713,7 @@ VIDEO_META_SCHEMA = (
 
 
 def extract_video_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` ISO-BMFF metadata over (doc_id, payload: binary) —
+    """ISO-BMFF metadata over (doc_id, payload: binary) —
     the genuine-lake entry point (``ingest_binary_dir`` →
     ``extract_video_meta``). Rows whose payload is not a parseable
     container are DROPPED (row-wise degrade — one corrupt blob must
@@ -724,48 +721,7 @@ def extract_video_meta(df: DataFrame) -> DataFrame:
     :func:`extract_media_meta` instead). Arrow-batched; header-only
     parsing, so cost per blob is independent of blob size once the
     bytes are local."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_mp4_meta(b"" if b is None else bytes(b))
-                except (ValueError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["major_brand"],
-                        m["n_tracks"],
-                        m["timescale"],
-                        m["duration"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["n_samples"],
-                        m["n_keyframes"],
-                        m["last_kf_offset"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "major_brand",
-                    "n_tracks",
-                    "timescale",
-                    "duration",
-                    "video_codec",
-                    "width",
-                    "height",
-                    "n_samples",
-                    "n_keyframes",
-                    "last_kf_offset",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+    return extract(df, lambda b: decode_mp4_meta(b or b""), VIDEO_META_SCHEMA)
 
 
 @register(
@@ -803,47 +759,14 @@ def extract_video_meta(df: DataFrame) -> DataFrame:
 def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     payloads = d.select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
+        "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                m = decode_mp4_meta(_synth_mp4(len(bytes(b))))
-                rows.append(
-                    (
-                        doc_id,
-                        m["major_brand"],
-                        m["n_tracks"],
-                        m["timescale"],
-                        m["duration"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["n_samples"],
-                        m["n_keyframes"],
-                        m["last_kf_offset"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "major_brand",
-                    "n_tracks",
-                    "timescale",
-                    "duration",
-                    "video_codec",
-                    "width",
-                    "height",
-                    "n_samples",
-                    "n_keyframes",
-                    "last_kf_offset",
-                ],
-            )
-
-    return payloads.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: decode_mp4_meta(_synth_mp4(n)),
+        VIDEO_META_SCHEMA,
+        col="n",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1568,17 +1491,17 @@ def phash_blob(payload, sniff_gif: bool = False) -> int:
     if b[:8] == _PNG_MAGIC:
         try:
             return dhash_gray(decode_png_pixels(b))
-        except (ValueError, NotImplementedError, struct.error):
+        except DECODE_ERRORS:
             return fake_phash(b)
     if b[:2] == b"\xff\xd8":  # JPEG SOI: invalid utf-8, safe to sniff
         try:
             return dhash_gray(decode_jpeg_pixels(b))
-        except (ValueError, NotImplementedError, struct.error):
+        except DECODE_ERRORS:
             return fake_phash(b)
     if sniff_gif and b[:6] in (b"GIF87a", b"GIF89a"):
         try:
             return dhash_gray(decode_gif_pixels(b))
-        except (ValueError, NotImplementedError, struct.error):
+        except DECODE_ERRORS:
             return fake_phash(b)
     return fake_phash(b)
 
@@ -1587,25 +1510,16 @@ PHASH_SCHEMA = "doc_id bigint, phash bigint"
 
 
 def extract_phash(df: DataFrame, sniff_gif: bool = False) -> DataFrame:
-    """``mapInPandas`` perceptual-hash extraction over
+    """Perceptual-hash extraction over
     ``(doc_id, payload: binary)`` — Arrow-batched, one 60-bit hash per
     blob, the same distributed seam as :func:`extract_media_meta`.
     ``sniff_gif``: see :func:`phash_blob` (True for genuine blob lakes,
     False for anything whose payloads may be text)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "phash": [
-                        phash_blob(b, sniff_gif=sniff_gif)
-                        for b in pdf["payload"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(batches, schema=PHASH_SCHEMA)
+    return extract(
+        df,
+        lambda b: {"phash": phash_blob(b, sniff_gif=sniff_gif)},
+        PHASH_SCHEMA,
+    )
 
 
 @register(
@@ -1646,7 +1560,7 @@ def extract_phash(df: DataFrame, sniff_gif: bool = False) -> DataFrame:
     """,
     doc="Perceptual-hash (dHash) near-duplicate image pairs — the "
     "multimodal member of the near-dup family. Binary payloads -> "
-    "Arrow-batched mapInPandas hash (REAL pixel dHash for decodable "
+    "Arrow-batched mapInArrow hash (REAL pixel dHash for decodable "
     "PNGs: stdlib-zlib inflate + integer unfilter + integral-image "
     "block means, all integer-exact; the deterministic 1-D codepoint "
     "dHash for everything else) -> the same 4-chunk pigeonhole Hamming "
@@ -1770,7 +1684,7 @@ THUMB_SCHEMA = "doc_id bigint, thumb binary, thumb_w int, thumb_h int"
 def extract_thumbnails(
     df: DataFrame, out_h: int = 32, out_w: int = 32, sniff_gif: bool = False
 ) -> DataFrame:
-    """``mapInPandas`` thumbnail extraction over
+    """Thumbnail extraction over
     ``(doc_id, payload: binary)``: decode (real pixels for PNG / GIF /
     baseline JPEG via the same sniff rules as :func:`phash_blob`) ->
     integer area-mean :func:`resize_gray` -> re-encode as an 8-bit
@@ -1782,46 +1696,30 @@ def extract_thumbnails(
     resize / frame-sample), all at the same Arrow-batched seam.
     """
 
-    def thumb_of(payload) -> tuple:
-        b = b"" if payload is None else bytes(payload)
+    def thumb_of(payload) -> dict:
+        b = payload or b""
         gray = None
         if b[:8] == _PNG_MAGIC:
             try:
                 gray = decode_png_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
+            except DECODE_ERRORS:
                 gray = None
         elif b[:2] == b"\xff\xd8":
             try:
                 gray = decode_jpeg_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
+            except DECODE_ERRORS:
                 gray = None
         elif sniff_gif and b[:6] in (b"GIF87a", b"GIF89a"):
             try:
                 gray = decode_gif_pixels(b)
-            except (ValueError, NotImplementedError, struct.error):
+            except DECODE_ERRORS:
                 gray = None
         if gray is None:
-            return None, None, None
+            return {"thumb": None, "thumb_w": None, "thumb_h": None}
         small = resize_gray(gray, out_h, out_w)
-        return encode_png_gray(small), out_w, out_h
+        return {"thumb": encode_png_gray(small), "thumb_w": out_w, "thumb_h": out_h}
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            thumbs = [thumb_of(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "thumb": [t[0] for t in thumbs],
-                    "thumb_w": pd.array(
-                        [t[1] for t in thumbs], dtype="Int32"
-                    ),
-                    "thumb_h": pd.array(
-                        [t[2] for t in thumbs], dtype="Int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=THUMB_SCHEMA)
+    return extract(df, thumb_of, THUMB_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -2521,63 +2419,14 @@ def decode_audio_meta(payload: bytes) -> dict:
     return m
 
 
-def _audio_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    """One Arrow-safe frame for AUDIO_META_SCHEMA rows: nullable Int32
-    for the WAV-only byte_rate and object dtype for the FLAC-only
-    checksum, so an all-WAV or all-FLAC batch still carries the right
-    arrow types."""
-    cols = list(zip(*rows)) if rows else [[] for _ in range(11)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "container": pd.array(cols[1], dtype="string"),
-            "codec": pd.array(cols[2], dtype="string"),
-            "channels": pd.array(cols[3], dtype="Int32"),
-            "sample_rate": pd.array(cols[4], dtype="Int32"),
-            "bits_per_sample": pd.array(cols[5], dtype="Int32"),
-            "n_frames": pd.array(cols[6], dtype="int64"),
-            "duration_ms": pd.array(cols[7], dtype="int64"),
-            "byte_rate": pd.array(cols[8], dtype="Int32"),
-            "n_meta": pd.array(cols[9], dtype="Int32"),
-            "checksum": pd.array(cols[10], dtype="string"),
-        }
-    )
-
-
 def extract_audio_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` audio metadata over (doc_id, payload: binary) —
+    """Audio metadata over (doc_id, payload: binary) —
     the genuine-lake entry point, twin of :func:`extract_video_meta`.
     Rows whose payload is not a parseable WAV/RF64/FLAC container are
     DROPPED (row-wise degrade; NotImplementedError — a legal but
     unsupported format tag — degrades the same way, never aborts the
     sweep). Header-only: cost per blob is independent of blob size."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_audio_meta(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return extract(df, lambda b: decode_audio_meta(b or b""), AUDIO_META_SCHEMA)
 
 
 #: q_audio_meta's DuckDB oracle — the parameter closed form replayed in
@@ -2649,31 +2498,12 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                n = int(n)
-                blob = _synth_flac(n) if n % 2 else _synth_wav(n)
-                m = decode_audio_meta(blob)
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: decode_audio_meta(_synth_flac(n) if n % 2 else _synth_wav(n)),
+        AUDIO_META_SCHEMA,
+        col="n",
+    )
 
 
 #: q_mp3_meta's DuckDB oracle — the synth_mp3_params closed form replayed
@@ -2749,29 +2579,12 @@ def q_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_audio_meta(_synth_mp3(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: decode_audio_meta(_synth_mp3(n)),
+        AUDIO_META_SCHEMA,
+        col="n",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -2967,44 +2780,11 @@ SUBTITLE_META_SCHEMA = (
 
 
 def extract_subtitle_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` subtitle metadata over (doc_id, payload: string)
+    """Subtitle metadata over (doc_id, payload: string)
     — the genuine-lake seam for caption sidecar files (ingest the .srt/
     .vtt blobs, decode utf-8, route here). Unparseable rows are DROPPED
     (row-wise degrade, the extract_video_meta discipline)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, s in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = parse_subtitles("" if s is None else str(s))
-                except ValueError:
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["format"],
-                        m["n_cues"],
-                        m["first_start_ms"],
-                        m["last_end_ms"],
-                        m["total_cue_ms"],
-                        m["total_chars"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "format",
-                    "n_cues",
-                    "first_start_ms",
-                    "last_end_ms",
-                    "total_cue_ms",
-                    "total_chars",
-                ],
-            )
-
-    return df.mapInPandas(batches, schema=SUBTITLE_META_SCHEMA)
+    return extract(df, lambda s: parse_subtitles(s or ""), SUBTITLE_META_SCHEMA)
 
 
 #: q_subtitle_meta's DuckDB oracle — the parameter closed form.
@@ -3047,36 +2827,12 @@ def q_subtitle_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.encode(F.col("text"), "utf-8")).alias("n"),
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = parse_subtitles(_synth_subtitles(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["format"],
-                        m["n_cues"],
-                        m["first_start_ms"],
-                        m["last_end_ms"],
-                        m["total_cue_ms"],
-                        m["total_chars"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "format",
-                    "n_cues",
-                    "first_start_ms",
-                    "last_end_ms",
-                    "total_cue_ms",
-                    "total_chars",
-                ],
-            )
-
-    return payloads.mapInPandas(batches, schema=SUBTITLE_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: parse_subtitles(_synth_subtitles(n)),
+        SUBTITLE_META_SCHEMA,
+        col="n",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3343,61 +3099,21 @@ EXIF_META_SCHEMA = (
 
 
 def extract_exif_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` Exif metadata over (doc_id, payload: binary) —
+    """Exif metadata over (doc_id, payload: binary) —
     the genuine-lake entry point: JPEG/PNG blobs in, one metadata row
     per blob that carries a parseable Exif block; all other rows are
     DROPPED (row-wise degrade). Header-only: cost per blob is the
     segment/chunk walk, independent of pixel data size."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = parse_exif(
-                        extract_exif_payload(b"" if b is None else bytes(b))
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["byte_order"],
-                        m["orientation"],
-                        m["make"],
-                        m["model"],
-                        m["datetime"],
-                        m["datetime_original"],
-                        m["pix_x"],
-                        m["pix_y"],
-                        m["has_gps"],
-                        m["n_tags"],
-                    )
-                )
-            yield _exif_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=EXIF_META_SCHEMA)
-
-
-def _exif_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    """Arrow-safe typed frame for EXIF_META_SCHEMA rows (nullable Int32
-    for tags absent from a given blob)."""
-    cols = list(zip(*rows)) if rows else [[] for _ in range(11)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "byte_order": pd.array(cols[1], dtype="string"),
-            "orientation": pd.array(cols[2], dtype="Int32"),
-            "make": pd.array(cols[3], dtype="string"),
-            "model": pd.array(cols[4], dtype="string"),
-            "dt": pd.array(cols[5], dtype="string"),
-            "dt_original": pd.array(cols[6], dtype="string"),
-            "pix_x": pd.array(cols[7], dtype="Int32"),
-            "pix_y": pd.array(cols[8], dtype="Int32"),
-            "has_gps": pd.array(cols[9], dtype="boolean"),
-            "n_tags": pd.array(cols[10], dtype="Int32"),
-        }
+    return extract(
+        df,
+        lambda b: _exif_row(parse_exif(extract_exif_payload(b or b""))),
+        EXIF_META_SCHEMA,
     )
+
+
+def _exif_row(m: dict) -> dict:
+    """parse_exif's dict under EXIF_META_SCHEMA's column names."""
+    return dict(m, dt=m["datetime"], dt_original=m["datetime_original"])
 
 
 #: q_exif_meta's DuckDB oracle — the synth_exif_params closed form in
@@ -3441,29 +3157,12 @@ def q_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = parse_exif(_synth_exif_tiff(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["byte_order"],
-                        m["orientation"],
-                        m["make"],
-                        m["model"],
-                        m["datetime"],
-                        m["datetime_original"],
-                        m["pix_x"],
-                        m["pix_y"],
-                        m["has_gps"],
-                        m["n_tags"],
-                    )
-                )
-            yield _exif_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=EXIF_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: _exif_row(parse_exif(_synth_exif_tiff(n))),
+        EXIF_META_SCHEMA,
+        col="n",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -3750,61 +3449,14 @@ WEBM_META_SCHEMA = (
 )
 
 
-def _webm_meta_frame(rows: list[tuple]) -> pd.DataFrame:
-    cols = list(zip(*rows)) if rows else [[] for _ in range(12)]
-    return pd.DataFrame(
-        {
-            "doc_id": pd.array(cols[0], dtype="int64"),
-            "doctype": pd.array(cols[1], dtype="string"),
-            "doctype_version": pd.array(cols[2], dtype="Int32"),
-            "timestamp_scale": pd.array(cols[3], dtype="int64"),
-            "duration_ms": pd.array(cols[4], dtype="Int64"),
-            "n_tracks": pd.array(cols[5], dtype="Int32"),
-            "video_codec": pd.array(cols[6], dtype="string"),
-            "width": pd.array(cols[7], dtype="Int32"),
-            "height": pd.array(cols[8], dtype="Int32"),
-            "audio_codec": pd.array(cols[9], dtype="string"),
-            "audio_channels": pd.array(cols[10], dtype="Int32"),
-            "sampling_hz": pd.array(cols[11], dtype="Int32"),
-        }
-    )
-
-
 def extract_webm_meta(df: DataFrame) -> DataFrame:
-    """``mapInPandas`` Matroska/WebM metadata over (doc_id, payload:
+    """Matroska/WebM metadata over (doc_id, payload:
     binary) — the genuine-lake entry point, twin of
     :func:`extract_video_meta` for the EBML container family. Rows
     whose payload is not a parseable Matroska stream are DROPPED
     (row-wise degrade). Header-only: Clusters are hopped by size,
     never read."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    m = decode_webm_meta(b"" if b is None else bytes(b))
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append(
-                    (
-                        doc_id,
-                        m["doctype"],
-                        m["doctype_version"],
-                        m["timestamp_scale"],
-                        m["duration_ms"],
-                        m["n_tracks"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["audio_codec"],
-                        m["audio_channels"],
-                        m["sampling_hz"],
-                    )
-                )
-            yield _webm_meta_frame(rows)
-
-    return df.mapInPandas(batches, schema=WEBM_META_SCHEMA)
+    return extract(df, lambda b: decode_webm_meta(b or b""), WEBM_META_SCHEMA)
 
 
 #: q_webm_meta's DuckDB oracle — the synth_webm_params closed form.
@@ -3858,30 +3510,12 @@ def q_webm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_webm_meta(_synth_webm(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["doctype"],
-                        m["doctype_version"],
-                        m["timestamp_scale"],
-                        m["duration_ms"],
-                        m["n_tracks"],
-                        m["video_codec"],
-                        m["width"],
-                        m["height"],
-                        m["audio_codec"],
-                        m["audio_channels"],
-                        m["sampling_hz"],
-                    )
-                )
-            yield _webm_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=WEBM_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: decode_webm_meta(_synth_webm(n)),
+        WEBM_META_SCHEMA,
+        col="n",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4346,26 +3980,9 @@ def q_ogg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.length(F.encode(F.col("text"), "utf-8")).alias("n")
     )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n in zip(pdf["doc_id"], pdf["n"]):
-                m = decode_audio_meta(_synth_ogg(int(n)))
-                rows.append(
-                    (
-                        doc_id,
-                        m["container"],
-                        m["codec"],
-                        m["channels"],
-                        m["sample_rate"],
-                        m["bits_per_sample"],
-                        m["n_frames"],
-                        m["duration_ms"],
-                        m["byte_rate"],
-                        m["n_meta"],
-                        m["checksum"],
-                    )
-                )
-            yield _audio_meta_frame(rows)
-
-    return payloads.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    return extract(
+        payloads,
+        lambda n: decode_audio_meta(_synth_ogg(n)),
+        AUDIO_META_SCHEMA,
+        col="n",
+    )

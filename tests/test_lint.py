@@ -31,6 +31,12 @@ so an eager action there (``.count()``, ``.collect()``, ``.first()``,
 ``.take()``) is one more Spark job per leaf, and a ``newSession()`` there
 is a session plus a conf copy per leaf. Its detector is pinned against
 the planning code that did both.
+
+A fourth check keeps per-blob Python work on the one Arrow kernel,
+``llm.extract.extract``: ``llm/multimodal.py`` and ``llm/curation.py``
+may call ``.mapInPandas(`` only inside an explicit exemption set. Its
+detector is pinned against the hand-written loop ``extract_audio_meta``
+used before the kernel existed.
 """
 
 from __future__ import annotations
@@ -249,3 +255,76 @@ def test_lint_catches_pre_fix_merge_planning():
     )
     assert violations is not None and len(violations) == 2
     assert "`count(…)`" in violations[0] and "`newSession(…)`" in violations[1]
+
+
+# -- per-blob extractors stay on the shared Arrow kernel -----------------
+
+#: Top-level functions allowed their own mapInPandas: q_robots_admission
+#: reads three columns and keeps a per-batch host cache, which the
+#: one-column kernel does not express.
+_MAP_IN_PANDAS_EXEMPT = {"q_robots_admission"}
+
+_KERNEL_MODULES = ("multimodal.py", "curation.py")
+
+
+def _map_in_pandas_calls(tree: ast.Module) -> list[tuple[str, int]]:
+    """(enclosing top-level function, line) of every ``.mapInPandas(``."""
+    out = []
+    for top in tree.body:
+        for sub in ast.walk(top):
+            if (
+                isinstance(sub, ast.Call)
+                and isinstance(sub.func, ast.Attribute)
+                and sub.func.attr == "mapInPandas"
+            ):
+                out.append((getattr(top, "name", "<module>"), sub.lineno))
+    return out
+
+
+def test_per_blob_extractors_use_the_arrow_kernel():
+    violations = [
+        f"llm/{mod}:{line}: `{fn}` calls mapInPandas — route per-blob "
+        "work through llm.extract.extract"
+        for mod in _KERNEL_MODULES
+        for fn, line in _map_in_pandas_calls(
+            ast.parse((PKG / "llm" / mod).read_text())
+        )
+        if fn not in _MAP_IN_PANDAS_EXEMPT
+    ]
+    assert not violations, "\n".join(violations)
+
+
+_PRE_KERNEL_AUDIO_EXTRACT = """
+def extract_audio_meta(df: DataFrame) -> DataFrame:
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = []
+            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
+                try:
+                    m = decode_audio_meta(b"" if b is None else bytes(b))
+                except (ValueError, NotImplementedError, struct.error):
+                    continue
+                rows.append(
+                    (
+                        doc_id,
+                        m["container"],
+                        m["codec"],
+                        m["channels"],
+                        m["sample_rate"],
+                        m["bits_per_sample"],
+                        m["n_frames"],
+                        m["duration_ms"],
+                        m["byte_rate"],
+                        m["n_meta"],
+                        m["checksum"],
+                    )
+                )
+            yield _audio_meta_frame(rows)
+
+    return df.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+"""
+
+
+def test_lint_catches_pre_kernel_extract_audio_meta():
+    calls = _map_in_pandas_calls(ast.parse(_PRE_KERNEL_AUDIO_EXTRACT))
+    assert [fn for fn, _ in calls] == ["extract_audio_meta"]

@@ -5667,3 +5667,155 @@ def test_training_shard_audit_composition_tar_zip_tfrecord(spark):
     assert len(by_fmt["tar"]) == synth_webdataset_params(9)["n_samples"]
     assert len(by_fmt["zip"]) == synth_zip_params(9)["n_samples"]
     assert len(by_fmt["tfrecord"]) == synth_tfrecord_params(9)["n_records"]
+
+
+# -- the shared per-blob extraction kernel (llm/extract.py) ---------------
+
+
+def test_extract_kernel_keeps_all_null_int_column_typed(spark):
+    """A nullable int field that is NULL in every row of a batch still
+    arrives as a NULL ``int``: the Arrow column is built from the
+    declared type, never inferred from the values."""
+    from parquet_compactor_spark.llm.extract import extract
+
+    df = spark.createDataFrame(
+        [(1, b"a"), (2, b"bb"), (3, None)], "doc_id bigint, payload binary"
+    )
+    out = extract(
+        df,
+        lambda b: {"width": None, "n": len(b or b"")},
+        "doc_id bigint, width int, n bigint",
+    )
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,width:int,n:bigint>"
+    )
+    rows = sorted(out.collect())
+    assert [(r.doc_id, r.width, r.n) for r in rows] == [
+        (1, None, 1),
+        (2, None, 2),
+        (3, None, 0),
+    ]
+
+
+def test_extract_kernel_drops_only_the_row_of_each_decode_error(spark):
+    """Each member of DECODE_ERRORS rejects its own blob; the rows
+    around it survive."""
+    import struct
+
+    from parquet_compactor_spark.llm.extract import DECODE_ERRORS, extract
+
+    assert set(DECODE_ERRORS) == {ValueError, NotImplementedError, struct.error}
+
+    def decode(b: bytes) -> dict:
+        if b == b"value":
+            raise ValueError("bad blob")
+        if b == b"unsupported":
+            raise NotImplementedError("unsupported variant")
+        if b == b"short":
+            struct.unpack(">I", b[:2])
+        return {"n": len(b)}
+
+    df = spark.createDataFrame(
+        [
+            (1, b"ok"),
+            (2, b"value"),
+            (3, b"unsupported"),
+            (4, b"short"),
+            (5, b"fine"),
+        ],
+        "doc_id bigint, payload binary",
+    )
+    rows = extract(df, decode, "doc_id bigint, n int").collect()
+    assert sorted((r.doc_id, r.n) for r in rows) == [(1, 2), (5, 4)]
+
+
+def test_extract_kernel_fails_the_job_outside_the_error_contract(spark):
+    """An exception outside DECODE_ERRORS is a bug, not a bad blob: the
+    job fails instead of silently dropping rows."""
+    from parquet_compactor_spark.llm.extract import extract
+
+    df = spark.createDataFrame([(1, b"x")], "doc_id bigint, payload binary")
+    out = extract(df, lambda b: {}["missing"], "doc_id bigint, n int")
+    with pytest.raises(Exception, match="KeyError"):
+        out.collect()
+
+
+def test_extract_kernel_explode_yields_one_row_per_element(spark):
+    """explode=True: one output row per returned dict, none for ``[]``,
+    with the carried doc_id repeated on every row."""
+    from parquet_compactor_spark.llm.extract import extract
+
+    df = spark.createDataFrame(
+        [(1, "abc"), (2, ""), (3, "z")], "doc_id bigint, payload string"
+    )
+    out = extract(
+        df,
+        lambda s: [{"seq": i, "ch": c} for i, c in enumerate(s)],
+        "doc_id bigint, seq int, ch string",
+        explode=True,
+    )
+    assert sorted((r.doc_id, r.seq, r.ch) for r in out.collect()) == [
+        (1, 0, "a"),
+        (1, 1, "b"),
+        (1, 2, "c"),
+        (3, 0, "z"),
+    ]
+
+
+def test_extract_kernel_empty_partitions_yield_no_rows(spark):
+    """An empty frame yields no rows, and the empty partitions of a
+    sparse one add none."""
+    from parquet_compactor_spark.llm.extract import extract
+
+    schema = "doc_id bigint, n int"
+
+    def run(df):
+        out = extract(df, lambda n: {"n": n}, schema, col="n")
+        return [(r.doc_id, r.n) for r in out.collect()]
+
+    assert run(spark.createDataFrame([], schema)) == []
+    sparse = spark.createDataFrame([(7, 3)], schema).repartition(4)
+    assert run(sparse) == [(7, 3)]
+
+
+def test_every_migrated_extractor_keeps_its_declared_schema(spark):
+    """Every per-blob extractor and synth twin running on the kernel
+    exposes exactly its declared schema string."""
+    from pyspark.sql.types import StructType
+
+    from parquet_compactor_spark.llm import curation as cu
+    from parquet_compactor_spark.llm import multimodal as mm
+    from tests.conftest import SF_SMOKE as sf
+
+    blobs = spark.createDataFrame([], "doc_id bigint, payload binary")
+    texts = spark.createDataFrame([], "doc_id bigint, payload string")
+    cases = [
+        (mm.extract_media_meta(blobs), mm.META_SCHEMA),
+        (mm.extract_video_meta(blobs), mm.VIDEO_META_SCHEMA),
+        (mm.extract_phash(blobs), mm.PHASH_SCHEMA),
+        (mm.extract_thumbnails(blobs), mm.THUMB_SCHEMA),
+        (mm.extract_audio_meta(blobs), mm.AUDIO_META_SCHEMA),
+        (mm.extract_subtitle_meta(texts), mm.SUBTITLE_META_SCHEMA),
+        (mm.extract_exif_meta(blobs), mm.EXIF_META_SCHEMA),
+        (mm.extract_webm_meta(blobs), mm.WEBM_META_SCHEMA),
+        (mm.q_video_meta(spark, sf), mm.VIDEO_META_SCHEMA),
+        (mm.q_audio_meta(spark, sf), mm.AUDIO_META_SCHEMA),
+        (mm.q_mp3_meta(spark, sf), mm.AUDIO_META_SCHEMA),
+        (mm.q_ogg_meta(spark, sf), mm.AUDIO_META_SCHEMA),
+        (mm.q_subtitle_meta(spark, sf), mm.SUBTITLE_META_SCHEMA),
+        (mm.q_exif_meta(spark, sf), mm.EXIF_META_SCHEMA),
+        (mm.q_webm_meta(spark, sf), mm.WEBM_META_SCHEMA),
+        (cu.extract_warc_records(blobs), cu.WARC_RECORDS_SCHEMA),
+        (cu.extract_webdataset_samples(blobs), cu.WEBDATASET_SCHEMA),
+        (cu.extract_zip_samples(blobs), cu.ZIP_SAMPLES_SCHEMA),
+        (cu.extract_sitemap_urls(texts), cu.SITEMAP_SCHEMA),
+        (cu.extract_tfrecord_samples(blobs), cu.TFRECORD_SCHEMA),
+        (cu.q_html_extract(spark, sf), cu.HTML_EXTRACT_SCHEMA),
+        (cu.q_warc_records(spark, sf), cu.WARC_RECORDS_SCHEMA),
+        (cu.q_webdataset_samples(spark, sf), cu.WEBDATASET_SCHEMA),
+        (cu.q_zip_samples(spark, sf), cu.ZIP_SAMPLES_SCHEMA),
+        (cu.q_sitemap_urls(spark, sf), cu.SITEMAP_SCHEMA),
+        (cu.q_tfrecord_samples(spark, sf), cu.TFRECORD_SCHEMA),
+    ]
+    for df, ddl in cases:
+        assert df.schema == StructType.fromDDL(ddl), ddl
